@@ -48,6 +48,27 @@ object Bench {
     (s, a)
   }
 
+  /** Round isolation shared by Bench and [[Trace]]. Drops the p1 and w4
+    * memoised frames so each round builds (and pays for) its own
+    * intermediates, and releases every persisted / locally-checkpointed
+    * RDD block: otherwise blocks accumulate across rounds and are freed
+    * only when the ContextCleaner notices the RDD was garbage-collected —
+    * GC-timing-dependent eviction pressure that made identical legs differ
+    * 2-6x (d11 legs 49/117/19 s at sf10). Shuffle files accumulate the same
+    * way (deleted only once the ShuffleDependency is collected): a 3-query
+    * sf10 run leaked 61 GB of blockmgr files and died on ENOSPC, so one
+    * explicit GC per round bounds on-disk shuffle state to about one
+    * round's worth. Safe between rounds: no frame from a previous round is
+    * referenced after clearMaterialized. */
+  def resetRound(spark: org.apache.spark.sql.SparkSession): Unit = {
+    queries.Pipeline.clearMaterialized()
+    queries.DynamicRow.clearMaterialized()
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -112,30 +133,7 @@ object Bench {
     // the sentinel -1.0 so the artifact stays valid JSON and the miss is
     // unmistakable.
     val runMaps: Seq[Map[String, Double]] = (1 to nRuns).map { r =>
-      // The warm-up (and any previous round) materialized p1 and the w4
-      // validated frame; drop both so every measured round builds (and
-      // pays for) the sfDir intermediates. ALSO release every persisted /
-      // locally-checkpointed RDD block the previous round left behind:
-      // without this, blocks accumulate across rounds and are freed only
-      // when the ContextCleaner notices the RDD was garbage-collected —
-      // GC-timing-dependent eviction pressure that made identical legs
-      // differ 2-6x (d11 legs 49/117/19 s at sf10, the d55-style
-      // bimodality). Safe between rounds: no frame from a previous round
-      // is referenced after clearMaterialized.
-      queries.Pipeline.clearMaterialized()
-      queries.DynamicRow.clearMaterialized()
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      // SHUFFLE files (not just blocks) also accumulate: the ContextCleaner
-      // deletes a shuffle's spill files only after the ShuffleDependency is
-      // garbage-collected, and a round over shuffle-heavy queries (the
-      // suffix-array builds write several GB each at sf10) can fill the
-      // disk before any full GC happens naturally — a 3-query sf10 probe
-      // leaked 61 GB of blockmgr files and died on ENOSPC. One explicit GC
-      // per round bounds on-disk shuffle state to roughly one round's
-      // worth.
-      System.gc()
+      resetRound(spark)
       // SPARK_GRAFT_BENCH_QUERY_HYGIENE=1: ALSO drop each query's
       // registered shuffles right after it finishes (r13 — the full
       // 235-query sf10 sweep accumulated ~90 GB of shuffle files across

@@ -281,7 +281,7 @@ object TickerFeatures {
     * slice per cell (~400 rows) but adds two extra shuffle stages. Cost
     * model: series wins when `avgHist × asOfs > avgHist + asOfs × 400 +
     * slack` — i.e. histories long relative to the bounded slice AND more
-    * than one as_of. Calibration (graft.ProbeDeep over GenScale deep
+    * than one as_of. Calibration (both forms timed over GenScale deep
     * tilings, round 5 — computation forced via sum(hash), not count, which
     * the optimizer prunes):
     *

@@ -552,8 +552,9 @@ case class NearestCells(child: Expression, ids: Array[Long],
 case class PqEncodeCodes(child: Expression, codebooks: Array[Array[Array[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "empty codebook")
+  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty) &&
+    codebooks.forall(_.forall(_.length == codebooks(0)(0).length)),
+    "empty or ragged codebook")
   private val m = codebooks.length
   private val sub = codebooks(0)(0).length
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
@@ -626,8 +627,9 @@ case class PqEncodeCodes(child: Expression, codebooks: Array[Array[Array[Double]
 case class PqLutExpr(child: Expression, codebooks: Array[Array[Array[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "empty codebook")
+  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty) &&
+    codebooks.forall(_.forall(_.length == codebooks(0)(0).length)),
+    "empty or ragged codebook")
   private val m = codebooks.length
   private val sub = codebooks(0)(0).length
   override def dataType: DataType =

@@ -87,11 +87,11 @@ object Dedup {
     * form costs ~10x more (higher-order functions don't codegen). Bands
     * carry ONLY (band, id): the wide shingle arrays never enter a
     * band-join shuffle. */
-  private[graft] def jvmBands(df: DataFrame, idCol: String, textCol: String,
+  private def jvmBands(df: DataFrame, idCol: String, textCol: String,
                        shingleK: Int, numHashes: Int,
                        numBands: Int): (DataFrame, DataFrame) = {
     val rowsPerBand = numHashes / numBands
-    // both relations checkpointed (r8 sf10 StageProfile d5): `sh` feeds
+    // both relations checkpointed (r8 sf10 stage profile of d5): `sh` feeds
     // the signature build AND both shingle sides of the Jaccard verify,
     // `banded` feeds both sides of the band self-join — un-checkpointed,
     // the tokenize+shingle+minhash expressions re-ran once per consumer
@@ -134,7 +134,7 @@ object Dedup {
   /** Exact-Jaccard verify over deduped candidate pairs: each pair joins
     * its two shingle sets once; candidates are deduped across bands
     * BEFORE this (expensive) step so each pair verifies once. */
-  private[graft] def verifyJaccard(candidates: DataFrame, sh: DataFrame,
+  private def verifyJaccard(candidates: DataFrame, sh: DataFrame,
                             jaccardThreshold: Double): DataFrame = {
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
@@ -352,22 +352,15 @@ object Dedup {
       s"connectedComponents needs integral node ids, got " +
         s"${pairs.schema(aCol).dataType}/${pairs.schema(bCol).dataType} — " +
         "hash other id types to int64 first (e.g. xxhash64)")
-    def dbg(label: String, t0: Long): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // materialize the INPUT once before the symmetric union: the two
     // union branches are separate stages, so a lazy (expensive) pair plan
     // would run twice — and with AQE each branch re-plans it again. The
     // pair miner feeding this is usually the most expensive stage in the
     // whole query (measured 7x on the sf1 rehearsal: 77 s -> 11 s).
-    val tF = System.nanoTime()
     val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .localCheckpoint()
-    dbg("fwd checkpoint", tF)
-    val tE = System.nanoTime()
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
-    dbg("edges checkpoint", tE)
     // round 0 fused into the node extraction: component = min(node,
     // min neighbor) straight off the symmetric edge list — one groupBy
     // replaces a full propagate round (every node appears as src)
@@ -383,7 +376,6 @@ object Dedup {
     var prevSum = labelSum(labels)
     var converged = false
     var iter = 0
-    var tR = System.nanoTime()
     while (!converged && iter < maxIter) {
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("component").as("__nl")),
@@ -407,8 +399,6 @@ object Dedup {
       prevSum = nextSum
       labels = next
       iter += 1
-      dbg(s"round $iter", tR)
-      tR = System.nanoTime()
     }
     require(converged,
       s"connectedComponents did not converge within $maxIter rounds")

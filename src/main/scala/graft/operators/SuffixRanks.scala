@@ -792,10 +792,10 @@ object SuffixRanks {
       // the +off lookup is a POSITIONAL SHIFT within a document, so it is
       // lead(r, off) over the per-doc window (positions are dense 1..n) —
       // never a positional self-join: the 15M×15M sort-merge join version
-      // of this line degraded 50× by round 3 at sf10 (profiled via
-      // `StageProfile d67`) while the per-doc window is doc-bounded by
-      // construction. Beyond-end positions take sentinel 0 (< every real
-      // rank — the shorter-suffix-first rule).
+      // of this line degraded 50× by round 3 at sf10 (stage-profiled)
+      // while the per-doc window is doc-bounded by construction.
+      // Beyond-end positions take sentinel 0 (< every real rank — the
+      // shorter-suffix-first rule).
       // persisted on big builds only: the pair-count aggregate AND the
       // ranking pass both consume it — un-persisted, the lead-window
       // exchange re-runs per consumer (~15 s/round at sf10); on small

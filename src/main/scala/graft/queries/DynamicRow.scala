@@ -80,10 +80,9 @@ object DynamicRow {
     TickerValidation.validate(TickerFeatures.dynamicFeatures(grid, in))
   }
 
-  /** Input synthesis split out so the stage profiler can time blocks
-    * independently of the full drive. */
-  private[graft] def buildInputs(s: SparkSession,
-                                 dir: String): (TickerFeatures.Inputs, DataFrame) = {
+  /** Input synthesis: the synthesized feature inputs and the cell grid. */
+  private def buildInputs(s: SparkSession,
+                          dir: String): (TickerFeatures.Inputs, DataFrame) = {
     val li = Tables.lineitem(s, dir)
     val base = li.groupBy(col("l_suppkey").as("sk"), col("l_shipdate").as("date"))
       .agg(moneySum(col("l_extendedprice")).as("b"))

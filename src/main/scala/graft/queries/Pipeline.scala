@@ -16,14 +16,6 @@ object Pipeline {
 
   def defs: Seq[QueryDef] = Seq(p1, p2, p3, p4, p5, p6, p7, p8, m1)
 
-  private[graft] def inputsForProbe(s: org.apache.spark.sql.SparkSession,
-                                    dir: String) = inputsFrom(s, dir)
-  private[graft] def p1MaterializedForProbe(s: org.apache.spark.sql.SparkSession,
-                                            dir: String) = p1Materialized(s, dir)
-  private[graft] def indexForProbe(s: org.apache.spark.sql.SparkSession,
-                                   dir: String) =
-    indexFrom(s, dir, inputsFrom(s, dir).prices.select("ticker").distinct())
-
   private def inputsFrom(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val orders = Tables.orders(s, dir)
     val li = Tables.lineitem(s, dir)
@@ -177,7 +169,7 @@ object Pipeline {
       // The price-block physical form is chosen from the data shape
       // (choosePriceForm): at this shape (~10-row histories × 5 as_ofs)
       // the cost model picks the grid form — matching both the round-4
-      // wall measurement and the round-5 ProbeDeep calibration (grid and
+      // wall measurement and the round-5 deep-history calibration (grid and
       // series tie at 3.5 s here; series wins 2-4× only once histories ×
       // as_ofs outgrow its flat enrichment cost — the 100 TB shape). The
       // probe reads the checkpointed series: ~ms.

@@ -89,16 +89,16 @@ class ScoringSpec extends SparkSpec {
   }
 
   /** The p4 GBT-fit envelope (round-7 verdict task 3): the last rows-only
-    * ML surface gets a regression gate. Mirrors `StageProfile p4` exactly
-    * — the REAL p1 feature table (sf0.001 for spec cost), the same
-    * drawdown-derived label, the same fixed seed (42) and walk-forward
-    * cutoff — and pins the AUC floor PROFILE_p4.txt recorded (0.9998 on
-    * the quiet-VM run; floor 0.99 leaves room for MLlib version drift but
-    * would catch any real fit regression). Fit wall-time is recorded via
-    * info() so a future slowdown is visible in the test report. */
+    * ML surface gets a regression gate. Fits what p4 fits — the REAL p1
+    * feature table (sf0.001 for spec cost), the same drawdown-derived
+    * label, the same fixed seed (42) and walk-forward cutoff — and pins
+    * the AUC floor PROFILE_p4.txt recorded (0.9998 on the quiet-VM run;
+    * floor 0.99 leaves room for MLlib version drift but would catch any
+    * real fit regression). Fit wall-time is recorded via info() so a
+    * future slowdown is visible in the test report. */
   test("p4 envelope: GBT fit on the real feature table — fixed seed/split AUC floor") {
     val dir = "/root/testdata/sf0.001"
-    val features = graft.queries.Pipeline.p1MaterializedForProbe(spark, dir)
+    val features = graft.queries.Pipeline.p1.fn(spark, dir)
     val labeled = features.withColumn("cut_label",
       when(col("max_drawdown_1y") > 0.5, 1.0).otherwise(0.0))
     val t0 = System.nanoTime()

@@ -270,6 +270,13 @@ class TextVectorSpec extends SparkSpec {
         }
       }
     }
+    // a ragged codebook (one codeword one dim short) is refused at
+    // construction: reading `sub` off codeword 0 would otherwise index past
+    // the short codeword at eval, where the column form returned NULL
+    val ragged = cb.updated(1, cb(1).updated(2, Array(-2.0)))
+    val child = org.apache.spark.sql.catalyst.expressions.Literal(null)
+    intercept[IllegalArgumentException](graft.functions.PqEncodeCodes(child, ragged))
+    intercept[IllegalArgumentException](graft.functions.PqLutExpr(child, ragged))
   }
 
   test("DotProductLong and PqAdcSum reject unsupported element types at " +

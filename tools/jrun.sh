@@ -1,5 +1,6 @@
 #!/bin/bash
 # Standalone JVM launcher for the graft mains (no sbt): tools/jrun.sh <MainClass> [args...]
+# Mains: graft.Verify, graft.Bench, graft.Trace, graft.Explain, graft.PlanLint, graft.GenScale.
 # Env passthrough: SPARK_GRAFT_* vars as usual. Mirrors the driver's invocation.
 cd "$(dirname "$0")/.." || exit 1
 exec java \
